@@ -48,11 +48,14 @@ object Bench {
     // plan-building only (plus each operator's own eager trainer work,
     // thrown away); no timed result is precomputed — every timed run
     // still executes its full plan from the parquet inputs.
-    selected.foreach { case (name, fn) =>
-      try { fn(spark, sfDir); () }
+    // a failed pre-build leaves its query to time the cold build path,
+    // so the record names it ("prebuild_failed")
+    val prebuildFailed = selected.flatMap { case (name, fn) =>
+      try { fn(spark, sfDir); None }
       catch { case e: Throwable =>
         System.err.println(
           s"[bench] artifact pre-build $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // release construction residue BEFORE the timed phase: operators'
@@ -318,8 +321,11 @@ object Bench {
     // and best aggregate over the 3 fastest runs. "runs" records the
     // per-query sample size actually taken.
     val runsTaken = jmap(_.nRuns)
-    val driftJson = driftFlags.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"base_runs":$Runs,"max_runs":$MaxRuns,"retry_rule":"rerun while spread(best3) > 0.5*min or tight-spread >15% drift vs previous BENCH_FULL; best/spread over 3 fastest","agg":"min","stream_rec_per_sec":${streamRecPerSec.round},"stream_rec_per_sec_pre":${streamPre.round},"stream_rec_per_sec_post":${streamPost.round},"stream_post_depressed":$streamPostDepressed,"stream_floor":${StreamFloor.round},"stream_floor_ok":$streamFloorOk,"sf":"$sfDir","drift_flags":$driftJson,"runs":$runsTaken,"spreads":$spreads,"shuffle_read_bytes":$shufReads,"shuffle_write_bytes":$shufWrites,"queries":$qs}"""
+    def jsonList(names: Seq[String]): String =
+      names.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val driftJson = jsonList(driftFlags)
+    val prebuildJson = jsonList(prebuildFailed)
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"base_runs":$Runs,"max_runs":$MaxRuns,"retry_rule":"rerun while spread(best3) > 0.5*min or tight-spread >15% drift vs previous BENCH_FULL; best/spread over 3 fastest","agg":"min","stream_rec_per_sec":${streamRecPerSec.round},"stream_rec_per_sec_pre":${streamPre.round},"stream_rec_per_sec_post":${streamPost.round},"stream_post_depressed":$streamPostDepressed,"stream_floor":${StreamFloor.round},"stream_floor_ok":$streamFloorOk,"sf":"$sfDir","drift_flags":$driftJson,"prebuild_failed":$prebuildJson,"runs":$runsTaken,"spreads":$spreads,"shuffle_read_bytes":$shufReads,"shuffle_write_bytes":$shufWrites,"queries":$qs}"""
     // STDOUT gets a COMPACT line, the full record goes to the files:
     // the harness keeps only the last ~2000 chars of output, and the
     // full per-query record (~5 KB at 141 queries) can never fit — it
@@ -336,7 +342,7 @@ object Bench {
       .sortBy(-_._2.best).take(5)
       .map { case (k, r) => "\"" + k + "\":" + r.best }
       .mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"n_queries":${results.size},"agg":"min","base_runs":$Runs,"max_runs":$MaxRuns,"stream_rec_per_sec":${streamRecPerSec.round},"stream_rec_per_sec_pre":${streamPre.round},"stream_rec_per_sec_post":${streamPost.round},"stream_post_depressed":$streamPostDepressed,"stream_floor":${StreamFloor.round},"stream_floor_ok":$streamFloorOk,"sf":"$sfDir","drift_flags_n":${driftFlags.size},"full_record":"BENCH_FULL.json","queries":$headline,"slowest_ext":$slowest}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"n_queries":${results.size},"agg":"min","base_runs":$Runs,"max_runs":$MaxRuns,"stream_rec_per_sec":${streamRecPerSec.round},"stream_rec_per_sec_pre":${streamPre.round},"stream_rec_per_sec_post":${streamPost.round},"stream_post_depressed":$streamPostDepressed,"stream_floor":${StreamFloor.round},"stream_floor_ok":$streamFloorOk,"sf":"$sfDir","drift_flags_n":${driftFlags.size},"prebuild_failed":$prebuildJson,"full_record":"BENCH_FULL.json","queries":$headline,"slowest_ext":$slowest}"""
     println(compact)
     // two mirrors of the FULL record: target/bench.json (untracked
     // scratch) and BENCH_FULL.json (repo root, COMMITTED) — the round

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, SubqueryAlias}
 
 /** Adaptive scan fan-out for CPU-dense kernel passes (guide §2.5,
@@ -36,10 +37,12 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPla
   * a plan containing exchanges AQE would EXECUTE the upstream shuffle
   * stages as real jobs whose results are never reused. The probe is
   * therefore gated on the analyzed plan being a scan-only subtree
-  * (project / filter / subquery-alias over a leaf): anything wider —
-  * joins, aggregates, generators, repartitions — returns `df`
-  * untouched, which is also semantically right (post-exchange width is
-  * already the session's shuffle parallelism).
+  * (project / filter / subquery-alias over a leaf, with no subquery
+  * expression — `.rdd` runs a scalar or IN subquery as a job of its
+  * own): anything wider — joins, aggregates, generators, repartitions,
+  * subqueries — returns `df` untouched, which is also semantically
+  * right (post-exchange width is already the session's shuffle
+  * parallelism).
   *
   * Correctness: round-robin repartition permutes rows across
   * partitions only; every consumer here is declarative (the driver
@@ -49,12 +52,15 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPla
   */
 object Parallelism {
 
-  /** Scan-only check: project/filter chains over a leaf relation — the
+  /** Scan-only check: project/filter chains over a leaf relation with
+    * no subquery expression (scalar, IN, EXISTS) anywhere in them — the
     * shapes whose `.rdd` probe plans cheaply and runs no job. Also used
     * by operators deciding whether a multi-consumer input needs a
     * materialization (a scan re-reads cheaply; a derived plan pays its
     * kernels once per consumer). */
   private[operators] def scanOnly(p: LogicalPlan): Boolean = p match {
+    case _ if p.expressions.exists(
+        _.exists(_.isInstanceOf[PlanExpression[_]])) => false
     case _: LeafNode => true
     case _: Project | _: Filter | _: SubqueryAlias =>
       p.children.forall(scanOnly)

@@ -84,18 +84,6 @@ object RegisterStream {
     * generation partition — replay can only touch batch ids at or after
     * the last checkpointed offset commit, so compaction below that
     * watermark never races the overwrite. */
-  private def contributions(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // explicit schema: robust to a not-yet-created store and to a store
-    // that has only seen empty batches (no parquet footers to infer from)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-  }
-
   private val windowedSchema =
     "window_start timestamp, window_end timestamp, platform string, " +
       "n bigint, batch_id bigint"
@@ -155,7 +143,7 @@ object RegisterStream {
   private def visible(spark: org.apache.spark.sql.SparkSession,
       outDir: String, path: String, schema: String): DataFrame = {
     val (gen, upTo) = readManifest(spark, outDir)
-    contributions(spark, s"$outDir/$path", schema)
+    readOrEmpty(spark, s"$outDir/$path", schema)
       .filter(col("batch_id") === lit(-gen) && lit(gen) > 0 ||
         col("batch_id") > lit(upTo))
   }
@@ -177,7 +165,7 @@ object RegisterStream {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     def retire(path: String, schema: String, groupCols: Seq[String]): Unit = {
-      val src = contributions(spark, s"$outDir/$path", schema)
+      val src = readOrEmpty(spark, s"$outDir/$path", schema)
         .filter(col("batch_id") === lit(-gen) && lit(gen) > 0 ||
           (col("batch_id") > lit(upTo) && col("batch_id") <= lit(upToBatchId)))
       val agg = src.groupBy(groupCols.map(col): _*)

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Dedup
 
@@ -21,33 +20,21 @@ import graft.operators.Dedup
   *     mass, never index×index; batch-internal pairs canonicalize via
   *     least/greatest, corpus-internal pairs cannot form
   *     ([[graft.operators.Dedup.cdcOverlapIncrement]]);
-  *  3. emitted pairs append to `outDir/pairs`, the batch's chunk keys
-  *     append to the chunk index, both batch_id-partitioned with
-  *     dynamic partition overwrite so a replayed batch overwrites
-  *     exactly its own contribution (the [[RegisterStream.dualSink]]
-  *     idempotence discipline).
+  *  3. the pairs and the batch's chunk keys commit in the
+  *     [[TieredIndex.BatchSink]] order (pairs write, index append,
+  *     maintain), each a replay-idempotent dynamic overwrite of the
+  *     batch's own partitions.
   *
-  * '''Index layout and maintenance''' live in [[TieredIndex]]: a
-  * recent tier of per-batch dirs sub-partitioned by fingerprint
+  * '''Index layout, maintenance and crash safety''' live in
+  * [[TieredIndex]]: per-batch dirs sub-partitioned by fingerprint
   * bucket `pmod(fp, nBuckets)`, folded every `compactEvery` batches
-  * into LSM size-tiered base epochs (O(log n) live epochs; a fold
-  * reads only the recent dirs it folds, a merge only the two epochs
-  * it merges — the base is never rewritten wholesale except at its
-  * own doubling point, so per-trigger maintenance cost is bounded by
-  * similar-sized tiers instead of O(corpus)). Probes read
-  * `liveEpochs(bucket ∈ batch's buckets)` ∪ `recent(upto < batch_id <
-  * current, same buckets)` — the bucket predicates are PARTITION
-  * filters, so the scan touches only directories that can contain a
-  * matching fingerprint; with the key-restricted join inside
-  * [[Dedup.cdcOverlapIncrement]], total per-batch cost is ∝ batch
-  * keys + matching postings. Crash safety (torn-fold invisibility via
-  * `_SUCCESS`-gated epoch selection, replay idempotence, restarts
-  * across folds) is the [[TieredIndex]] contract; only
-  * checkpoint-committed batches fold, so a replayed batch never meets
-  * its own keys. Once batches are folded their per-batch identity is
-  * gone, so re-running the stream over the same outDir with a FRESH
-  * checkpoint is supported only before the first fold — wipe outDir
-  * and checkpoint together.
+  * into LSM size-tiered base epochs. Probes read only the batch's
+  * buckets (PARTITION filters), so with the key-restricted join
+  * inside [[Dedup.cdcOverlapIncrement]] per-batch cost is ∝ batch
+  * keys + matching postings. Once batches are folded their per-batch
+  * identity is gone, so re-running the stream over the same outDir
+  * with a FRESH checkpoint is supported only before the first fold —
+  * wipe outDir and checkpoint together.
   *
   * `nBuckets` is baked into the on-disk partition values, so it is
   * recorded once at `outDir/index_meta` and later sinks on the same
@@ -87,24 +74,8 @@ object StreamCdc {
     "doc_a bigint, doc_b bigint, shared_chunks bigint, " +
       "shared_bytes bigint, batch_id bigint"
 
-  private def index(outDir: String) = new TieredIndex(outDir, keySchema)
-
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-
-  /** The corpus chunk-key relation visible to batch `batchId`,
-    * bucket-pruned to `buckets` (None = all buckets) — see
-    * [[TieredIndex.corpusKeys]]. */
-  private[graft] def corpusKeys(spark: SparkSession, outDir: String,
-      batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
-    index(outDir).corpusKeys(spark, batchId, buckets)
+  /** The chunk index under `outDir` (see [[TieredIndex]]). */
+  private[graft] def index(outDir: String) = new TieredIndex(outDir, keySchema)
 
   /** Start the sink: for each micro-batch of documents, emit overlap
     * pairs touching the batch and grow the chunk index. `docs` must
@@ -119,50 +90,25 @@ object StreamCdc {
       idCol: String = "doc_id", textCol: String = "text",
       minChunk: Int = 1, maxChunk: Int = Int.MaxValue,
       nBuckets: Int = 64, compactEvery: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(nBuckets >= 1,
-      s"StreamCdc: nBuckets must be >= 1, got $nBuckets")
-    require(compactEvery >= 2,
-      s"StreamCdc: compactEvery must be >= 2, got $compactEvery")
-    val idx = index(outDir)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        idx.ensureNBuckets(spark, nBuckets)
-        val keys = Dedup.cdcChunkIndex(batch, idCol, textCol, w,
-            maskBits, minLen, minChunk, maxChunk)
-          .withColumn("bucket",
-            pmod(col("fp"), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the batch's fingerprint buckets (≤ nBuckets values — a
-          // bounded collect) become partition filters on the index
-          // read: only directories that can hold a matching key are
-          // scanned
-          val buckets = keys.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          // strictly-older batches only: a replayed batch must not see
-          // its own crashed partial write as "corpus"
-          val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
-            .withColumnRenamed("doc_id", idCol)
-          Dedup.cdcOverlapIncrement(
-              keys.select(col("fp"), col("len"), col(idCol)), corpus,
-              idCol, minSharedBytes, maxDocsPerChunk)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/pairs")
-          idx.append(keys.select(col("fp"), col("len"),
-            col(idCol).as("doc_id"), col("bucket")), batchId)
-          // fold committed recent batches (strictly older than this
-          // one — they can never replay) once enough accumulate, plus
-          // at most one size-tiered merge
-          idx.maintain(spark, batchId, compactEvery)
-        } finally { keys.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    batchSink(outDir, w, maskBits, minLen, minSharedBytes,
+      maxDocsPerChunk, idCol, textCol, minChunk, maxChunk, nBuckets,
+      compactEvery).start(docs, checkpoint)
+
+  /** [[sink]]'s per-batch skeleton: one leg, the chunk keys bucketed
+    * by fingerprint (the index stores the id column as `doc_id`). */
+  private[streaming] def batchSink(outDir: String, w: Int, maskBits: Int,
+      minLen: Int, minSharedBytes: Int, maxDocsPerChunk: Int,
+      idCol: String, textCol: String, minChunk: Int, maxChunk: Int,
+      nBuckets: Int, compactEvery: Int): TieredIndex.BatchSink[Row] =
+    new TieredIndex.BatchSink[Row]("StreamCdc", outDir, nBuckets,
+      compactEvery, Seq(TieredIndex.Leg(index(outDir), col("fp"),
+        batch => Dedup.cdcChunkIndex(batch, idCol, textCol, w, maskBits,
+            minLen, minChunk, maxChunk)
+          .select(col("fp"), col("len"), col(idCol).as("doc_id")))))({
+      case Seq((keys, corpus)) => Dedup.cdcOverlapIncrement(keys, corpus,
+        "doc_id", minSharedBytes, maxDocsPerChunk)
+    })
 
   /** All overlap pairs seen so far — equal to batch
     * [[Dedup.cdcOverlapPairs]] over the union of committed batches

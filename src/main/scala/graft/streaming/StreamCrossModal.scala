@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Graph, Multimodal}
 import graft.operators.Multimodal.{MediaDecoder, FakeDecoder}
@@ -21,14 +20,12 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder}
   *     via [[Multimodal.paragraphEdgeIncrement]] (df-capped over the
   *     union frequency as of the batch), media pairs via
   *     [[Multimodal.nearDupIncrement]] (exact);
-  *  3. the tagged edge union appends to `outDir/pairs`; the batch's
-  *     postings append to their indexes — all batch_id-partitioned
-  *     with dynamic overwrite, so a replayed batch overwrites exactly
-  *     its own contribution.
+  *  3. the tagged edge union, then each leg's postings, commit in the
+  *     [[TieredIndex.BatchSink]] order — replay-idempotent.
   *
   * Both indexes are [[TieredIndex]]es (LSM fold/merge, bucket-pruned
-  * probes, crash-safe epochs — the [[StreamCdc]] contract);
-  * `nBuckets` is immutable per outDir.
+  * probes — the [[StreamCdc]] layout); `nBuckets` is immutable per
+  * outDir.
   *
   * '''Law''': after any prefix of batches, [[labelsView]] EQUALS
   * batch [[Multimodal.crossModalComponents]] over the union of those
@@ -42,26 +39,15 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder}
   * batches. */
 object StreamCrossModal {
 
-  private val textKeySchema = "doc_id bigint, h bigint"
-  private val mediaKeySchema = "media_id bigint, v array<float>, " +
-    "j int, k1 float, k2 float, k3 float, k4 float"
+  private val keySchemas = Map("text" -> "doc_id bigint, h bigint",
+    "media" -> StreamMediaDedup.keySchema)
   private val pairSchema =
     "doc_a bigint, doc_b bigint, modality string, batch_id bigint"
 
-  private def textIndex(outDir: String) =
-    new TieredIndex(s"$outDir/text", textKeySchema)
-  private def mediaIndex(outDir: String) =
-    new TieredIndex(s"$outDir/media", mediaKeySchema)
-
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+  /** The `modality` ("text" or "media") index under `outDir` (see
+    * [[TieredIndex]]). */
+  private[graft] def index(outDir: String, modality: String) =
+    new TieredIndex(s"$outDir/$modality", keySchemas(modality))
 
   /** Start the sink over a stream of `(doc_id, text)` rows. */
   def sink(docs: DataFrame, outDir: String, checkpoint: String,
@@ -69,75 +55,33 @@ object StreamCrossModal {
       maxParaDf: Int = 16, threshold: Double = 0.999,
       decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64,
       compactEvery: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(nBuckets >= 1,
-      s"StreamCrossModal: nBuckets must be >= 1, got $nBuckets")
-    require(compactEvery >= 2,
-      s"StreamCrossModal: compactEvery must be >= 2, got $compactEvery")
-    val tIdx = textIndex(outDir)
-    val mIdx = mediaIndex(outDir)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        tIdx.ensureNBuckets(spark, nBuckets)
-        mIdx.ensureNBuckets(spark, nBuckets)
-        val paras = Multimodal
-          .paragraphKeys(batch, delimiter, minParaLen)
-          .withColumn("bucket",
-            pmod(col("h"), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val mkeys = Multimodal
-          .nearDupIndex(Multimodal.docsAsMedia(batch), decoder)
-          .withColumn("bucket",
-            pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
-              col("k4")), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the batch's buckets (≤ nBuckets values each — bounded
-          // collects) become partition filters on the index reads
-          val tBuckets = paras.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val mBuckets = mkeys.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          val textEdges = Multimodal.paragraphEdgeIncrement(
-            paras.drop("bucket"),
-            tIdx.corpusKeys(spark, batchId, Some(tBuckets)),
-            maxParaDf)
-          val mediaEdges = Multimodal.nearDupIncrement(
-            mkeys.drop("bucket"),
-            mIdx.corpusKeys(spark, batchId, Some(mBuckets)),
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    batchSink(outDir, delimiter, minParaLen, maxParaDf, threshold,
+      decoder, nBuckets, compactEvery).start(docs, checkpoint)
+
+  /** [[sink]]'s per-batch skeleton: two legs, the text leg's paragraph
+    * postings (bucketed by paragraph hash) and the media leg's feature
+    * rows (the [[StreamMediaDedup]] leg over the docs as media). */
+  private[streaming] def batchSink(outDir: String, delimiter: String,
+      minParaLen: Int, maxParaDf: Int, threshold: Double,
+      decoder: MediaDecoder, nBuckets: Int, compactEvery: Int)
+      : TieredIndex.BatchSink[Row] =
+    new TieredIndex.BatchSink[Row]("StreamCrossModal", outDir, nBuckets,
+      compactEvery, Seq(
+        TieredIndex.Leg(index(outDir, "text"), col("h"),
+          Multimodal.paragraphKeys(_, delimiter, minParaLen)),
+        TieredIndex.Leg(index(outDir, "media"), StreamMediaDedup.bucket,
+          batch => Multimodal.nearDupIndex(Multimodal.docsAsMedia(batch),
+            decoder))))({
+      case Seq((paras, paraCorpus), (mkeys, mediaCorpus)) =>
+        val textEdges = Multimodal.paragraphEdgeIncrement(paras,
+          paraCorpus, maxParaDf)
+        val mediaEdges = Multimodal.nearDupIncrement(mkeys, mediaCorpus,
             threshold)
-            .select(col("media_a").as("doc_a"),
-              col("media_b").as("doc_b"))
-          textEdges.withColumn("modality", lit("text"))
-            .unionByName(
-              mediaEdges.withColumn("modality", lit("media")))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/pairs")
-          tIdx.append(paras, batchId)
-          mIdx.append(mkeys, batchId)
-          tIdx.maintain(spark, batchId, compactEvery)
-          mIdx.maintain(spark, batchId, compactEvery)
-        } finally { paras.unpersist(); mkeys.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
-
-  /** The corpus paragraph-posting relation visible to batch `batchId`,
-    * bucket-pruned — see [[TieredIndex.corpusKeys]]. */
-  private[graft] def textCorpusKeys(spark: SparkSession, outDir: String,
-      batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
-    textIndex(outDir).corpusKeys(spark, batchId, buckets)
-
-  /** The corpus media feature relation visible to batch `batchId`,
-    * bucket-pruned — see [[TieredIndex.corpusKeys]]. */
-  private[graft] def mediaCorpusKeys(spark: SparkSession,
-      outDir: String, batchId: Long,
-      buckets: Option[Seq[Int]]): DataFrame =
-    mediaIndex(outDir).corpusKeys(spark, batchId, buckets)
+          .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
+        textEdges.withColumn("modality", lit("text"))
+          .unionByName(mediaEdges.withColumn("modality", lit("media")))
+    })
 
   /** The accumulated cross-modal edge relation — `(doc_a, doc_b,
     * modality)`; text edges may repeat across batches (see object

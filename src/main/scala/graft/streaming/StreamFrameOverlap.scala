@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Multimodal
 import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
@@ -22,21 +21,14 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
   *     candidates, boilerplate cap over the union frequency as of
   *     this batch, each pair emitted exactly once when its later
   *     member arrives (corpus-internal pairs cannot form);
-  *  3. pairs append to `outDir/pairs`, the batch's postings append to
-  *     the index — both batch_id-partitioned with dynamic partition
-  *     overwrite, so a replayed batch overwrites exactly its own
-  *     contribution.
+  *  3. the pairs, then the batch's postings, commit in the
+  *     [[TieredIndex.BatchSink]] order — replay-idempotent.
   *
-  * The index is a [[TieredIndex]] (the [[StreamCdc]] /
-  * [[StreamMediaDedup]] discipline): a recent tier of per-batch dirs
-  * sub-partitioned by key bucket `pmod(hash(fk), nBuckets)`, folded
-  * every `compactEvery` batches into LSM size-tiered base epochs.
-  * Probes read only the bucket partitions the batch's own keys hash
-  * to — partition filters on every index scan — so per-batch cost is
-  * ∝ batch frames + matching postings, and maintenance is bounded by
-  * the tiers it merges, never O(corpus). Crash safety (torn-fold
-  * invisibility, replay idempotence, restarts across folds) is the
-  * [[TieredIndex]] contract; `nBuckets` is immutable per outDir.
+  * The index is a [[TieredIndex]] (the [[StreamCdc]] layout) bucketed
+  * by `pmod(hash(fk), nBuckets)`: probes read only the batch's
+  * buckets, so per-batch cost is ∝ batch frames + matching postings,
+  * and maintenance never costs O(corpus). `nBuckets` is immutable per
+  * outDir.
   *
   * '''Law''' ([[StreamCdc]]'s cap-crossing contract): after any
   * prefix of batches, [[pairsView]] EQUALS batch
@@ -54,23 +46,8 @@ object StreamFrameOverlap {
     "media_a bigint, media_b bigint, shared_frames bigint, " +
       "batch_id bigint"
 
-  private def index(outDir: String) = new TieredIndex(outDir, keySchema)
-
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-
-  /** The corpus frame-posting relation visible to batch `batchId`,
-    * bucket-pruned to `buckets` — see [[TieredIndex.corpusKeys]]. */
-  private[graft] def corpusKeys(spark: SparkSession, outDir: String,
-      batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
-    index(outDir).corpusKeys(spark, batchId, buckets)
+  /** The posting index under `outDir` (see [[TieredIndex]]). */
+  private[graft] def index(outDir: String) = new TieredIndex(outDir, keySchema)
 
   /** Start the sink: for each micro-batch of media, emit frame-level
     * overlap pairs touching the batch (≥ `minSharedFrames` shared
@@ -79,43 +56,22 @@ object StreamFrameOverlap {
       checkpoint: String, stride: Int = 1, minSharedFrames: Int = 2,
       maxMediaPerFrame: Int = 64, decoder: MediaDecoder = FakeDecoder,
       nBuckets: Int = 64, compactEvery: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(nBuckets >= 1,
-      s"StreamFrameOverlap: nBuckets must be >= 1, got $nBuckets")
-    require(compactEvery >= 2,
-      s"StreamFrameOverlap: compactEvery must be >= 2, got " +
-        s"$compactEvery")
-    val idx = index(outDir)
-    media.writeStream
-      .foreachBatch { (batch: Dataset[MediaRecord], batchId: Long) =>
-        val spark = batch.sparkSession
-        idx.ensureNBuckets(spark, nBuckets)
-        // decode once; only fixed-width (media_id, fk) postings persist
-        val keys = Multimodal.frameIndex(batch, stride, decoder)
-          .withColumn("bucket",
-            pmod(hash(col("fk")), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the batch's key buckets (≤ nBuckets values — a bounded
-          // collect) become partition filters on the index read
-          val buckets = keys.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          // strictly-older batches only: a replayed batch must not
-          // see its own crashed partial write as "corpus"
-          val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
-          Multimodal.frameOverlapIncrement(keys.drop("bucket"), corpus,
-              minSharedFrames, maxMediaPerFrame)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/pairs")
-          idx.append(keys, batchId)
-          idx.maintain(spark, batchId, compactEvery)
-        } finally { keys.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    batchSink(outDir, stride, minSharedFrames, maxMediaPerFrame, decoder,
+      nBuckets, compactEvery).start(media, checkpoint)
+
+  /** [[sink]]'s per-batch skeleton: one leg, the batch decoded once to
+    * fixed-width `(media_id, fk)` postings bucketed by frame key. */
+  private[streaming] def batchSink(outDir: String, stride: Int,
+      minSharedFrames: Int, maxMediaPerFrame: Int, decoder: MediaDecoder,
+      nBuckets: Int, compactEvery: Int)
+      : TieredIndex.BatchSink[MediaRecord] =
+    new TieredIndex.BatchSink[MediaRecord]("StreamFrameOverlap", outDir,
+      nBuckets, compactEvery, Seq(TieredIndex.Leg(index(outDir),
+        hash(col("fk")), Multimodal.frameIndex(_, stride, decoder))))({
+      case Seq((keys, corpus)) => Multimodal.frameOverlapIncrement(keys,
+        corpus, minSharedFrames, maxMediaPerFrame)
+    })
 
   /** All overlap pairs seen so far — equal to batch
     * [[Multimodal.frameOverlapPairs]] over the union of committed

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Multimodal
 import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
@@ -23,22 +22,15 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
   *     batch-internal pairs canonicalize, corpus-internal pairs
   *     cannot form — each pair emitted exactly once, when its later
   *     member arrives;
-  *  3. pairs append to `outDir/pairs`, the batch's keys append to the
-  *     feature index — both batch_id-partitioned with dynamic
-  *     partition overwrite, so a replayed batch overwrites exactly
-  *     its own contribution.
+  *  3. the pairs, then the batch's keys, commit in the
+  *     [[TieredIndex.BatchSink]] order — replay-idempotent.
   *
-  * The index is a [[TieredIndex]] — the [[StreamCdc]] layout verbatim
-  * (feature rows are fixed-width like chunk keys): a recent tier of
-  * per-batch dirs sub-partitioned by feature bucket
-  * `pmod(hash(j, k1..k4), nBuckets)`, folded every `compactEvery`
-  * batches into LSM size-tiered base epochs. Probes read only the
-  * bucket partitions the batch's own keys hash to — partition
-  * filters on every index scan — so per-batch cost is ∝ batch keys +
-  * matching postings, and maintenance is bounded by the tiers it
-  * merges, never O(corpus). Crash safety (torn-fold invisibility,
-  * replay idempotence, restart across folds) is the [[TieredIndex]]
-  * contract; `nBuckets` is immutable per outDir (enforced at start).
+  * The index is a [[TieredIndex]] (the [[StreamCdc]] layout; feature
+  * rows are fixed-width like chunk keys) bucketed by
+  * `pmod(hash(j, k1..k4), nBuckets)`: probes read only the batch's
+  * buckets, so per-batch cost is ∝ batch keys + matching postings,
+  * and maintenance never costs O(corpus). `nBuckets` is immutable per
+  * outDir.
   *
   * After any prefix of batches, [[pairsView]] EQUALS batch
   * [[Multimodal.nearDupPairs]] over the union of those batches — no
@@ -49,28 +41,16 @@ import graft.operators.Multimodal.{MediaDecoder, FakeDecoder, MediaRecord}
   * caveat). */
 object StreamMediaDedup {
 
-  private val keySchema = "media_id bigint, v array<float>, j int, " +
-    "k1 float, k2 float, k3 float, k4 float"
+  private[streaming] val keySchema = "media_id bigint, v array<float>, " +
+    "j int, k1 float, k2 float, k3 float, k4 float"
+  /** A feature row's bucket: its chunk key `(j, k1..k4)` hashed. */
+  private[streaming] val bucket =
+    hash(col("j"), col("k1"), col("k2"), col("k3"), col("k4"))
   private val pairSchema =
     "media_a bigint, media_b bigint, cosine double, batch_id bigint"
 
-  private def index(outDir: String) = new TieredIndex(outDir, keySchema)
-
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-
-  /** The corpus feature-key relation visible to batch `batchId`,
-    * bucket-pruned to `buckets` — see [[TieredIndex.corpusKeys]]. */
-  private[graft] def corpusKeys(spark: SparkSession, outDir: String,
-      batchId: Long, buckets: Option[Seq[Int]]): DataFrame =
-    index(outDir).corpusKeys(spark, batchId, buckets)
+  /** The feature index under `outDir` (see [[TieredIndex]]). */
+  private[graft] def index(outDir: String) = new TieredIndex(outDir, keySchema)
 
   /** Start the sink: for each micro-batch of media, emit perceptual
     * near-dup pairs touching the batch (cosine ≥ `threshold`) and
@@ -79,44 +59,23 @@ object StreamMediaDedup {
       checkpoint: String, threshold: Double = 0.9,
       decoder: MediaDecoder = FakeDecoder, nBuckets: Int = 64,
       compactEvery: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(nBuckets >= 1,
-      s"StreamMediaDedup: nBuckets must be >= 1, got $nBuckets")
-    require(compactEvery >= 2,
-      s"StreamMediaDedup: compactEvery must be >= 2, got $compactEvery")
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    batchSink(outDir, threshold, decoder, nBuckets, compactEvery)
+      .start(media, checkpoint)
+
+  /** [[sink]]'s per-batch skeleton: one leg, the batch decoded once
+    * to fixed-width feature rows (payloads never persist). */
+  private[streaming] def batchSink(outDir: String, threshold: Double,
+      decoder: MediaDecoder, nBuckets: Int, compactEvery: Int)
+      : TieredIndex.BatchSink[MediaRecord] = {
     require(threshold > 0 && threshold <= 1,
       s"StreamMediaDedup: threshold must be in (0, 1], got $threshold")
-    val idx = index(outDir)
-    media.writeStream
-      .foreachBatch { (batch: Dataset[MediaRecord], batchId: Long) =>
-        val spark = batch.sparkSession
-        idx.ensureNBuckets(spark, nBuckets)
-        // decode once; only fixed-width feature rows persist
-        val keys = Multimodal.nearDupIndex(batch, decoder)
-          .withColumn("bucket",
-            pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
-              col("k4")), lit(nBuckets)).cast("int"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the batch's feature buckets (≤ nBuckets values — a bounded
-          // collect) become partition filters on the index read
-          val buckets = keys.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq
-          // strictly-older batches only: a replayed batch must not
-          // see its own crashed partial write as "corpus"
-          val corpus = idx.corpusKeys(spark, batchId, Some(buckets))
-          Multimodal.nearDupIncrement(keys.drop("bucket"), corpus,
-              threshold)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$outDir/pairs")
-          idx.append(keys, batchId)
-          idx.maintain(spark, batchId, compactEvery)
-        } finally { keys.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    new TieredIndex.BatchSink[MediaRecord]("StreamMediaDedup", outDir,
+      nBuckets, compactEvery, Seq(TieredIndex.Leg(index(outDir), bucket,
+        Multimodal.nearDupIndex(_, decoder))))({
+      case Seq((keys, corpus)) =>
+        Multimodal.nearDupIncrement(keys, corpus, threshold)
+    })
   }
 
   /** All near-dup pairs seen so far — equal to batch

@@ -45,16 +45,6 @@ object StreamNearDedup {
   private val pairSchema =
     "doc_a bigint, doc_b bigint, jaccard double, batch_id bigint"
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-  }
-
   /** Start the sink: for each micro-batch of documents, emit verified
     * near-dup pairs touching the batch and grow the signature index.
     * `docs` must carry a long id column and a text column. */

@@ -38,16 +38,6 @@ object StreamSpanDedup {
     "doc_id bigint, n_tokens bigint, n_removed bigint, clean_text string, " +
       "batch_id bigint"
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-  }
-
   /** Start the sink: rewrite each micro-batch against everything seen
     * before it and grow the fingerprint index. `docs` must carry a long
     * id column and a text column. */

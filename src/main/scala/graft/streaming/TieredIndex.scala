@@ -1,16 +1,34 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** A bucket-partitioned, LSM-tiered parquet key index — the persisted
-  * state behind streaming dedup sinks ([[StreamCdc]], the CDC chunk
-  * index; [[StreamMediaDedup]], the perceptual feature index). One
-  * instance manages one `outDir`; rows are fixed-width key tuples
-  * (`keySchema`) plus a precomputed `bucket` partition column whose
-  * modulus is immutable per outDir.
+  * state behind the four incremental-index sinks: [[StreamCdc]] (CDC
+  * chunk keys), [[StreamMediaDedup]] (perceptual features),
+  * [[StreamFrameOverlap]] (frame postings) and [[StreamCrossModal]]
+  * (two indexes: paragraph postings and media features). One instance
+  * manages one `outDir`; rows are fixed-width key tuples (`keySchema`)
+  * plus a precomputed `bucket` partition column whose modulus is
+  * immutable per outDir.
+  *
+  * '''The sinks' commit order lives here.''' All four sinks run one
+  * per-batch skeleton, [[TieredIndex.BatchSink]]: a family supplies
+  * only its index legs (key schema, bucket expression, batch → keys)
+  * and its increment ((batch keys, corpus keys) per leg → pairs). Per
+  * micro-batch the skeleton probes each leg's strictly-older corpus,
+  * then commits in this order: the `outDir/pairs` write, each leg's
+  * [[append]], each leg's [[maintain]]. Every commit is idempotent
+  * under a replay of the same batch id — the pairs and append writes
+  * are dynamic overwrites of that batch's own partitions, the probe
+  * never sees the batch's own keys, and maintenance folds only
+  * strictly older batches — so a crash after any prefix of the
+  * sequence replays to the uninterrupted result (law-tested per
+  * commit point).
   *
   * '''Layout''' (two tiers, the [[graft.operators.IvfIndex]]
   * discipline):
@@ -76,14 +94,6 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
 
   private def fs(spark: SparkSession) =
     new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: String): DataFrame =
-    if (fs(spark).exists(new Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType.fromDDL(schema))
 
   /** One committed base-tier epoch: covers batch ids [from, upto]. */
   private[graft] case class Epoch(epoch: Long, from: Long, upto: Long,
@@ -351,5 +361,73 @@ private[graft] final class TieredIndex(outDir: String, keySchema: String) {
       f.delete(tmp, true)
       validate()
     }
+  }
+}
+
+private[graft] object TieredIndex {
+
+  /** One index of an incremental-index sink: the index, the bucket
+    * expression over its key rows (taken `pmod nBuckets`), and the
+    * doc-local pass that turns a micro-batch into key rows. */
+  final case class Leg[T](index: TieredIndex, bucket: Column,
+      keys: Dataset[T] => DataFrame)
+
+  /** The per-batch skeleton of an incremental-index sink (see the
+    * class doc): `increment` maps each leg's (batch keys, corpus keys),
+    * in leg order, to the batch's pairs. `nBuckets` is immutable per
+    * index (checked on every batch); `compactEvery` committed recent
+    * batches fold into a base epoch. */
+  final class BatchSink[T](family: String, outDir: String,
+      nBuckets: Int, compactEvery: Int, legs: Seq[Leg[T]])(
+      increment: Seq[(DataFrame, DataFrame)] => DataFrame) {
+    require(nBuckets >= 1,
+      s"$family: nBuckets must be >= 1, got $nBuckets")
+    require(compactEvery >= 2,
+      s"$family: compactEvery must be >= 2, got $compactEvery")
+
+    /** One micro-batch (the testable core; [[start]] adapts it to
+      * `foreachBatch`): decode and bucket each leg's keys once, probe
+      * each index, then run the batch's commits in order — the pairs
+      * write, each leg's append, each leg's maintain — stopping after
+      * the first `stopAfter` of them (a crash at that commit point).
+      * Returns the number of commits in the sequence. */
+    private[streaming] def foldBatch(batch: Dataset[T], batchId: Long,
+        stopAfter: Int = Int.MaxValue): Int = {
+      val spark = batch.sparkSession
+      legs.foreach(_.index.ensureNBuckets(spark, nBuckets))
+      val keys = legs.map(l => l.keys(batch)
+        .withColumn("bucket", pmod(l.bucket, lit(nBuckets)).cast("int"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+      try {
+        val probes = legs.zip(keys).map { case (l, k) =>
+          // the batch's buckets (≤ nBuckets values — a bounded collect)
+          // become partition filters on the index read; strictly-older
+          // batches only, so a replayed batch never sees its own
+          // crashed partial write as corpus
+          val buckets = k.select(col("bucket")).distinct()
+            .collect().map(_.getInt(0)).toSeq
+          (k.drop("bucket"),
+            l.index.corpusKeys(spark, batchId, Some(buckets)))
+        }
+        val commits: Seq[() => Unit] =
+          (() => increment(probes).withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite").partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(s"$outDir/pairs")) +:
+            (legs.zip(keys).map { case (l, k) =>
+              () => l.index.append(k, batchId) } ++
+              legs.map(l =>
+                () => l.index.maintain(spark, batchId, compactEvery)))
+        commits.take(stopAfter).foreach(_())
+        commits.size
+      } finally keys.foreach(_.unpersist())
+    }
+
+    def start(stream: Dataset[T], checkpoint: String): StreamingQuery =
+      stream.writeStream
+        .foreachBatch { (batch: Dataset[T], batchId: Long) =>
+          foldBatch(batch, batchId); () }
+        .option("checkpointLocation", checkpoint)
+        .start()
   }
 }

@@ -350,4 +350,39 @@ class PlanSpec extends SparkTestBase {
         s"$name plans a partition-less window:\n$exec")
     }
   }
+
+  test("fanOutScan leaves a plan carrying a subquery untouched: the " +
+    "input comes back unchanged and no Spark job starts") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // a one-partition scan under a scalar subquery: a width probe
+    // (`.rdd`) on this plan would run the subquery as a throwaway job
+    val df = spark.range(0, 10, 1, 1)
+      .select(col("id"), expr("(select max(id) from range(5))").as("m"))
+    val groups = new LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.put(
+          String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    def sentinel(tag: String): Unit = {
+      sc.setJobGroup(tag, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      ()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("before")
+      val out = operators.Parallelism.fanOutScan(df)
+      sentinel("after")
+      // job-start events arrive in order: whatever sits between the two
+      // sentinels started inside fanOutScan
+      val seen = Iterator.continually(groups.poll(30, TimeUnit.SECONDS))
+        .map { g => assert(g != null, "sentinel job never reported"); g }
+        .takeWhile(_ != "after").toList
+      assert(seen.dropWhile(_ != "before").drop(1).isEmpty, seen)
+      assert(out eq df)
+    } finally sc.removeSparkListener(listener)
+  }
 }

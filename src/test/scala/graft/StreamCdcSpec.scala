@@ -384,7 +384,7 @@ class StreamCdcSpec extends SparkTestBase {
     } finally q.stop()
 
     // the probe relation a later batch would read, pruned to one bucket
-    val probe = StreamCdc.corpusKeys(spark, out, batchId = 100L,
+    val probe = StreamCdc.index(out).corpusKeys(spark, batchId = 100L,
       buckets = Some(Seq(3)))
     val p = probe.queryExecution.executedPlan.toString
     val scans = p.linesIterator
@@ -395,7 +395,7 @@ class StreamCdcSpec extends SparkTestBase {
       l.substring(l.indexOf("PartitionFilters:")).takeWhile(_ != ']')
         .contains("bucket")), p)
     // and the pruned probe agrees with the unpruned view on that bucket
-    val full = StreamCdc.corpusKeys(spark, out, batchId = 100L,
+    val full = StreamCdc.index(out).corpusKeys(spark, batchId = 100L,
         buckets = None)
       .filter(pmod(col("fp"), lit(8)).cast("int") === 3)
     assert(probe.as[(Long, Int, Long)].collect().toSet ===

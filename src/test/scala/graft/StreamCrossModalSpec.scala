@@ -161,10 +161,10 @@ class StreamCrossModalSpec extends SparkTestBase {
     } finally q.stop()
 
     Seq(
-      StreamCrossModal.textCorpusKeys(spark, out, batchId = 100L,
-        buckets = Some(Seq(3))),
-      StreamCrossModal.mediaCorpusKeys(spark, out, batchId = 100L,
-        buckets = Some(Seq(3)))).foreach { probe =>
+      StreamCrossModal.index(out, "text").corpusKeys(spark,
+        batchId = 100L, buckets = Some(Seq(3))),
+      StreamCrossModal.index(out, "media").corpusKeys(spark,
+        batchId = 100L, buckets = Some(Seq(3)))).foreach { probe =>
       val p = probe.queryExecution.executedPlan.toString
       val scans = p.linesIterator
         .filter(_.contains("FileScan parquet")).toSeq

@@ -159,8 +159,8 @@ class StreamMediaDedupSpec extends SparkTestBase {
       batches.foreach { b => input.addData(b); q.processAllAvailable() }
     } finally q.stop()
 
-    val probe = StreamMediaDedup.corpusKeys(spark, out, batchId = 100L,
-      buckets = Some(Seq(3)))
+    val probe = StreamMediaDedup.index(out).corpusKeys(spark,
+      batchId = 100L, buckets = Some(Seq(3)))
     val p = probe.queryExecution.executedPlan.toString
     val scans = p.linesIterator
       .filter(_.contains("FileScan parquet")).toSeq
@@ -169,8 +169,8 @@ class StreamMediaDedupSpec extends SparkTestBase {
       l.substring(l.indexOf("PartitionFilters:")).takeWhile(_ != ']')
         .contains("bucket")), p)
     // and the pruned probe agrees with the unpruned view on that bucket
-    val full = StreamMediaDedup.corpusKeys(spark, out, batchId = 100L,
-        buckets = None)
+    val full = StreamMediaDedup.index(out).corpusKeys(spark,
+        batchId = 100L, buckets = None)
       .filter(pmod(hash(col("j"), col("k1"), col("k2"), col("k3"),
         col("k4")), lit(8)).cast("int") === 3)
     assert(probe.select("media_id", "j").as[(Long, Int)]
